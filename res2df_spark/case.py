@@ -31,14 +31,17 @@ class ResdataCase:
     def __init__(self, spark: SparkSession, data_path: str):
         self.spark = spark
         p = str(data_path)
-        # remember the deck file AS GIVEN: the extension check is
-        # case-insensitive ('mycase.data' is accepted), so rebuilding
-        # the path as '<root>.DATA' would lose the original spelling
-        # and never read the deck back on a case-sensitive filesystem
-        self._data_file: str | None = None
-        if p.upper().endswith(".DATA"):
-            self._data_file = os.path.abspath(p)
-            p = p[: -len(".DATA")]
+        #: the file the case was constructed with, AS GIVEN: the deck
+        #: falls back to it when ``<root>.DATA`` does not exist (an
+        #: include file, or a 'mycase.data' spelling on a case-sensitive
+        #: filesystem), like the reference's ``get_deck``
+        self._given = os.path.abspath(p)
+        stem, ext = os.path.splitext(p)
+        #: 'DATA' or 'PRT' when the case was named by that file, which
+        #: then stands for its case root
+        self._named = ext[1:].upper() if ext.upper() in (".DATA", ".PRT") else None
+        if self._named:
+            p = stem
         self.root = os.path.abspath(p)
         self._deck_text: str | None = None
         #: memo for binary-scan frames keyed by (method, params).
@@ -51,12 +54,17 @@ class ResdataCase:
 
     def path(self, ext: str) -> str:
         """Sibling file path for an extension (``'SMSPEC'`` →
-        ``<root>.SMSPEC``).  The deck itself resolves to the path the
-        case was CONSTRUCTED with when that carried a non-uppercase
-        ``.data`` spelling."""
-        if ext.upper() == "DATA" and self._data_file is not None:
-            return self._data_file
-        return f"{self.root}.{ext}"
+        ``<root>.SMSPEC``).  The deck, and a PRT file the case was
+        constructed with, resolve to the file as given when the
+        ``<root>.<ext>`` spelling does not exist."""
+        p = f"{self.root}.{ext}"
+        if (
+            ext.upper() in ("DATA", self._named)
+            and not os.path.isfile(p)
+            and os.path.isfile(self._given)
+        ):
+            return self._given
+        return p
 
     def _existing(self, ext: str) -> str | None:
         p = self.path(ext)

@@ -1,7 +1,15 @@
-"""CLI: ``res2csv``-style entry point (SURVEY §3.1 —
-/root/reference/src/res2df/res2csv.py): one subcommand per datatype
-module, deck/parquet in, CSV out (``-o -`` streams to stdout, the
-reference's convention)."""
+"""CLI: ``res2csv``-style entry point (SURVEY §3.1, reference
+res2csv.py): one subcommand per datatype module, CSV out (``-o -``
+streams to stdout, the reference's convention).
+
+Every ``res2csv`` subcommand goes through one
+:class:`res2df_spark.case.ResdataCase`, opened on the subcommand's path
+argument — the reference's ``module.df(ResdataFiles(path), ...)``
+idiom.  The subcommand calls the case method of its name; the options
+the case API does not have (``compdat --initvectors``,
+``--vfpnumbers``, ``nnc --pillars/--coords``, ``summary
+--params/--paramfile``, a missing explicit ``--zonemap``) are CLI
+post-steps on the case frame."""
 
 from __future__ import annotations
 
@@ -9,105 +17,104 @@ import argparse
 import os
 import sys
 
+from res2df_spark.case import ResdataCase
 from res2df_spark.session import get_spark
 from res2df_spark.sinks.writers import write_dataframe
 
-#: subcommand → (module runner, help)
-_DECK_MODULES = {
-    "compdat": "Connection table (COMPDAT/WELOPEN schedule pipeline)",
-    "gruptree": "Group-tree snapshots",
-    "satfunc": "Saturation-function tables",
-    "pvt": "PVT tables",
-    "equil": "Equilibrium records",
-    "wlist": "Well-list snapshots",
-    "vfpprod": "VFPPROD lift curves (melted)",
-    "vfpinj": "VFPINJ lift curves (melted)",
-    "faults": "Per-cell fault table (FAULTS box explode)",
-    "wcon": "Dated well-control table (WCONHIST/INJE/INJH/PROD)",
+#: subcommand → (path argument, help).  A ``deckfile`` is a .DATA or
+#: include file; a ``case`` is the case root of the binary simulator
+#: output (path with or without .DATA, reference res2csv's DATAFILE
+#: idiom).
+_MODULES = {
+    "compdat": ("deckfile", "Connection table (COMPDAT/WELOPEN schedule pipeline)"),
+    "gruptree": ("deckfile", "Group-tree snapshots"),
+    "satfunc": ("deckfile", "Saturation-function tables"),
+    "pvt": ("deckfile", "PVT tables"),
+    "equil": ("deckfile", "Equilibrium records"),
+    "wlist": ("deckfile", "Well-list snapshots"),
+    "vfpprod": ("deckfile", "VFPPROD lift curves (melted)"),
+    "vfpinj": ("deckfile", "VFPINJ lift curves (melted)"),
+    "faults": ("deckfile", "Per-cell fault table (FAULTS box explode)"),
+    "wcon": ("deckfile", "Dated well-control table (WCONHIST/INJE/INJH/PROD)"),
+    "summary": ("case", "Long summary table from CASE.SMSPEC/.UNSMRY"),
+    "grid": ("case", "Per-cell grid table from CASE.EGRID [+ .INIT, .UNRST]"),
+    "rft": ("case", "Per-connection RFT table from CASE.RFT"),
+    "nnc": ("case", "Non-neighbour connections from CASE.EGRID [+ TRANNNC from .INIT]"),
+    "trans": ("case", "Neighbour transmissibilities from CASE.EGRID + .INIT"),
+    "pillars": ("case", "Per-pillar statistics from CASE.EGRID [+ .INIT, .UNRST]"),
+    "fipreports": ("case", "FIP balance blocks from CASE.PRT"),
+    "wellconnstatus": ("case", "Connection status changes from CPI summary vectors"),
+    "wellcompletiondata": (
+        "deckfile", "Zone-aggregated completion data (compdat ⋈ lyr zonemap)"
+    ),
 }
 
-#: deck subcommands taking extra auxiliary inputs
-_DECK_MODULES_EXTRA = {
-    "wellcompletiondata": "Zone-aggregated completion data (compdat ⋈ lyr zonemap)",
-}
-
-#: subcommands reading binary simulator output; argument is the case
-#: root (path without extension, reference res2csv's DATAFILE idiom)
-_BINARY_MODULES = {
-    "summary": "Long summary table from CASE.SMSPEC/.UNSMRY",
-    "grid": "Per-cell grid table from CASE.EGRID [+ .INIT, .UNRST]",
-    "rft": "Per-connection RFT table from CASE.RFT",
-    "nnc": "Non-neighbour connections from CASE.EGRID [+ TRANNNC from .INIT]",
-    "trans": "Neighbour transmissibilities from CASE.EGRID + .INIT",
-    "pillars": "Per-pillar statistics from CASE.EGRID [+ .INIT, .UNRST]",
-    "fipreports": "FIP balance blocks from CASE.PRT",
-    "wellconnstatus": "Connection status changes from CPI summary vectors",
+_PATH_HELP = {
+    "deckfile": "input .DATA / include file",
+    "case": "case root (path with or without .DATA)",
 }
 
 
-def _run_binary_module(
-    name: str, spark, root: str, rstdates, time_index=None, column_keys=None,
-    start_date=None, end_date=None, with_params=False, vectors=None,
-    dropconstants=False, stackdates=False, region=None, soilcutoff=0.5,
-    sgascutoff=0.5, swatcutoff=0.5, group=False, wellname=None, date=None,
-    include_restart=False, paramfile=None, **kwargs,
-):
-    """Thin dispatch over :class:`res2df_spark.case.ResdataCase` — the
-    CLI and the user API share ONE composition of the module layer, so
-    they cannot drift (reference res2csv.py delegates to the same
-    per-module ``df(ResdataFiles, ...)`` entry points).
+def _frame(case, args):
+    """The subcommand's frame: the case method of its name, plus the
+    CLI-only post-steps.  ``rstdates`` follows the reference CLI
+    contract (grid.py:556-562, pillars.py:339-346): empty → no restart
+    data; an explicit value with no UNRST present raises."""
+    from pyspark.sql import functions as F
 
-    ``rstdates`` follows the reference CLI contract (grid.py:556-562,
-    pillars.py:339-346): empty string/None → no restart data; an
-    explicit value with no UNRST present raises (facade behavior)."""
-    from res2df_spark.case import ResdataCase
-
-    rstdates = rstdates or None
-    if name == "fipreports" and root.upper().endswith(".PRT"):
-        # reference fipreports accepts a bare PRT file as the "case"
-        from res2df_spark.modules import fipreports
-
-        return fipreports.df(spark, root, fipname=kwargs.get("fipname") or "FIPNUM")
-    case = ResdataCase(spark, root)
+    name = args.module
     if name == "summary":
-        keys = [k.strip() for k in (column_keys or "").split(",") if k.strip()]
+        keys = [k.strip() for k in args.column_keys.split(",") if k.strip()]
         # ALWAYS the reference's wide shape — the output schema must
         # not silently flip between long and wide depending on which
         # flags happen to be present (summary_mod.df pivots)
         out = case.summary(
-            time_index=time_index, column_keys=keys,
-            start_date=start_date or None, end_date=end_date or None,
-            include_restart=include_restart,
+            time_index=args.time_index, column_keys=keys,
+            start_date=args.start_date or None, end_date=args.end_date or None,
+            include_restart=args.include_restart,
         )
-        if with_params or paramfile:
+        if args.params or args.paramfile:
             from res2df_spark.sources.aux import attach_parameters, load_parameters
 
             out = attach_parameters(
-                out, load_parameters(case.root, filebase=paramfile or None)
+                out, load_parameters(case.root, filebase=args.paramfile or None)
             )
         return out
     if name == "grid":
         # reference grid_main (grid.py:759-772): wide restart shape by
-        # default, --stackdates for the DATE column, --vectors wildcards
-        # select INIT/UNRST properties, --dropconstants prunes
+        # default, --stackdates for the DATE column
         return case.grid(
-            rstdates=rstdates, vectors=vectors or "*",
-            stackdates=stackdates, dropconstants=dropconstants,
+            rstdates=args.rstdates or None, vectors=args.vectors,
+            stackdates=args.stackdates, dropconstants=args.dropconstants,
+        )
+    if name == "pillars":
+        # reference pillars_main (pillars.py:409-438): the CLI's contact
+        # cutoffs default to 0.5, unlike the case method's
+        return case.pillars(
+            region_col=args.region or None, rstdates=args.rstdates or None,
+            soilcutoff=args.soilcutoff, sgascutoff=args.sgascutoff,
+            swatcutoff=args.swatcutoff, group=args.group,
+            stackdates=args.stackdates,
+        )
+    if name == "trans":
+        return case.trans(
+            vectors=args.vectors, boundaryfilter=args.boundaryfilter,
+            group=args.group, coords=args.coords, onlykdir=args.onlyk,
+            onlyijdir=args.onlyij, addnnc=args.addnnc,
         )
     if name == "rft":
-        return case.rft(wellname=wellname, date=date)
+        return case.rft(wellname=args.wellname, date=args.date)
+    if name == "fipreports":
+        return case.fipreports(fipname=args.fipname or "FIPNUM")
     if name == "nnc":
         out = case.nnc()
-        # reference nnc fill_parser -c/--coords, -p/--pillars
-        # (nnc.py:175-200): vertical filter first (cheaper), then the
-        # midpoint-coordinate join
-        if kwargs.get("pillars"):
+        # reference nnc -p/--pillars, -c/--coords (nnc.py:175-200):
+        # vertical filter first (cheaper), then the midpoint join
+        if args.pillars:
             from res2df_spark.modules.grid import vertical_nnc_filter
 
             out = vertical_nnc_filter(out)
-        if kwargs.get("coords"):
-            from pyspark.sql import functions as F
-
+        if args.coords:
             from res2df_spark.modules.grid import nnc_coordinates
 
             geom = case.grid().select("I", "J", "K", "X", "Y", "Z")
@@ -117,139 +124,52 @@ def _run_binary_module(
                 F.col("Z_MID").alias("Z"),
             )
         return out
-    if name == "trans":
-        # reference trans fill_parser (trans.py:236-280)
-        return case.trans(
-            vectors=vectors or None,
-            boundaryfilter=kwargs.get("boundaryfilter", False),
-            group=group, coords=kwargs.get("coords", False),
-            onlykdir=kwargs.get("onlyk", False),
-            onlyijdir=kwargs.get("onlyij", False),
-            addnnc=kwargs.get("addnnc", False),
-        )
-    if name == "pillars":
-        # reference pillars_main (pillars.py:409-438): region split,
-        # contact cutoffs (CLI defaults all 0.5), --group aggregation
-        return case.pillars(
-            region_col=region or None, rstdates=rstdates,
-            soilcutoff=soilcutoff, sgascutoff=sgascutoff,
-            swatcutoff=swatcutoff, group=group, stackdates=stackdates,
-        )
-    if name == "fipreports":
-        return case.fipreports(fipname=kwargs.get("fipname") or "FIPNUM")
-    if name == "wellconnstatus":
-        return case.wellconnstatus()
-    raise SystemExit(f"unknown module {name}")
-
-
-def _run_deck_module(name: str, spark, deck_text: str, **kwargs):
-    from res2df_spark.modules import compdat, faults, gruptree, tables, vfp, wcon, wlist
-
     if name == "compdat":
-        # the reference shape (K1 == K2, 'OP/SH'), matching the res2csv
-        # contract AND ResdataCase.compdat() — the engine-internal
-        # single-K form is for downstream joins only
-        out = compdat.to_reference_shape(compdat.df(spark, deck_text))
-        initvectors = kwargs.get("initvectors")
-        if initvectors:
+        out = case.compdat()
+        if args.initvectors:
             # reference compdat --initvectors (compdat.py:927-950 →
-            # grid.merge_initvectors with ijknames=["I","J","K1"]):
-            # per-cell INIT vectors joined on the connection's cell
-            from pyspark.sql import functions as F
-
-            from res2df_spark.case import ResdataCase
-
-            grid = ResdataCase(spark, kwargs["deckfile"]).grid()
-            missing = [v for v in initvectors if v not in grid.columns]
+            # grid.merge_initvectors on I, J, K1): INNER like its pandas
+            # merge, so a connection in a cell absent from the grid
+            # frame drops
+            grid = case.grid()
+            missing = [v for v in args.initvectors if v not in grid.columns]
             if missing:
                 raise SystemExit(f"INIT vectors {missing} not found")
             dim = grid.select(
                 "I", "J", F.col("K").alias("K1"),
-                *[F.col(v) for v in initvectors],
+                *[F.col(v) for v in args.initvectors],
             )
-            # INNER like the reference's merge_initvectors
-            # (grid.py:365-408, pandas merge default): a connection
-            # addressing a cell absent from the grid frame drops
             out = out.join(dim, ["I", "J", "K1"])
         return out
     if name == "gruptree":
-        return gruptree.df(spark, deck_text, startdate=kwargs.get("startdate"))
-    if name == "satfunc":
-        return tables.satfunc_df(spark, deck_text, keywords=kwargs.get("keywords"))
-    if name == "pvt":
-        return tables.pvt_df(spark, deck_text, keywords=kwargs.get("keywords"))
-    if name == "equil":
-        return tables.equil_df(spark, deck_text, keywords=kwargs.get("keywords"))
-    if name == "wlist":
-        return wlist.df(spark, deck_text)
-    if name in ("vfpprod", "vfpinj"):
-        out = vfp.df_prod(spark, deck_text) if name == "vfpprod" else (
-            vfp.df_inj(spark, deck_text)
-        )
-        numbers = kwargs.get("vfpnumbers")
-        if out is not None and numbers:
-            # P10 int-list table filter (reference _vfpprod.py:95-98)
-            from pyspark.sql import functions as F
+        from datetime import date
 
+        startdate = date.fromisoformat(args.startdate) if args.startdate else None
+        return case.gruptree(startdate=startdate)
+    if name in ("satfunc", "pvt", "equil"):
+        return getattr(case, name)(keywords=args.keywords)
+    if name in ("vfpprod", "vfpinj"):
+        out = getattr(case, name)()
+        if out is not None and args.vfpnumbers:
+            # P10 int-list table filter (reference _vfpprod.py:95-98)
             from res2df_spark.functions.strings import string_to_intlist
 
-            out = out.filter(F.col("TABLE").isin(string_to_intlist(numbers)))
+            out = out.filter(F.col("TABLE").isin(string_to_intlist(args.vfpnumbers)))
         return out
-    if name == "faults":
-        return faults.df(spark, deck_text)
-    if name == "wcon":
-        return wcon.df(spark, deck_text)
-    raise SystemExit(f"unknown module {name}")
-
-
-def _run_wellcompletiondata(spark, deck_text: str, zonemap_path: str | None,
-                            excl_well_prefix: str | None,
-                            deck_dir: str = ".",
-                            use_wellconnstatus: bool = False,
-                            case_path: str | None = None):
-    """Forward wellcompletiondata flow (reference
-    wellcompletiondata.py:129-215): compdat pipeline ⋈ lyr zonemap →
-    per-zone OPEN/KH aggregation.
-
-    Zonemap discovery follows the reference's get_zonemap
-    (resdatafiles.py:207-247): ``--zonemap`` omitted → ``zones.lyr``
-    next to the deck, silently empty when absent; an EXPLICIT missing
-    path warns and yields the empty map.  An empty map means no
-    connection can be zoned, so the aggregate is empty — the
-    reference's "ZONE column not generated" empty-frame path."""
-    import os
-    import sys
-
-    from res2df_spark.modules import compdat, wellcompletiondata
-    from res2df_spark.sources.aux import zonemap_df
-
-    defaulted = zonemap_path is None
-    path = zonemap_path or "zones.lyr"
-    if not os.path.isabs(path):
-        path = os.path.join(deck_dir, path)
-    if os.path.isfile(path):
-        with open(path) as f:
-            zmap = zonemap_df(spark, f.read())  # already unrolled to (K, ZONE)
-    else:
-        if not defaulted:
-            print(f"Zonefile {path} not found, ignoring", file=sys.stderr)
-        zmap = spark.createDataFrame([], "K int, ZONE string")
-    conns = compdat.df(spark, deck_text)
-    connstatus = None
-    if use_wellconnstatus:
-        # the reference flag reads CPI:* vectors from the case summary
-        # (wellcompletiondata.py:82-84) — needs the case, not just the
-        # deck text
-        from res2df_spark.case import ResdataCase
-
-        connstatus = ResdataCase(spark, case_path).wellconnstatus()
-    out = wellcompletiondata.df(
-        conns, zmap.select("K", "ZONE"), excl_well_prefix=excl_well_prefix,
-        connstatus=connstatus,
-    )
-    return wellcompletiondata.attach_kh_metadata(
-        out, wellcompletiondata.detect_unit_system(deck_text)
-    )
+    if name == "wellcompletiondata":
+        # reference get_zonemap (resdatafiles.py:207-247): an explicit
+        # zonemap that does not exist warns and yields the empty map,
+        # so no connection is zoned and the aggregate is empty
+        try:
+            zmap = case.get_zonemap(args.zonemap)
+        except FileNotFoundError as e:
+            print(f"Zonefile {e} not found, ignoring", file=sys.stderr)
+            zmap = case.spark.createDataFrame([], "K int, ZONE string")
+        return case.wellcompletiondata(
+            zmap, excl_well_startswith=args.excl_well_startswith,
+            use_wellconnstatus=args.use_wellconnstatus,
+        )
+    return getattr(case, name)()
 
 
 def _add_verbosity(s: argparse.ArgumentParser) -> None:
@@ -281,11 +201,18 @@ def get_parser() -> argparse.ArgumentParser:
         description="Extract datatype tables from a deck via the Spark engine",
     )
     sub = p.add_subparsers(dest="module", required=True)
-    for name, help_ in _DECK_MODULES.items():
+    for name, (arg, help_) in _MODULES.items():
         s = sub.add_parser(name, help=help_)
         _add_verbosity(s)
-        s.add_argument("deckfile", help="input .DATA / include file")
+        s.add_argument("path", metavar=arg, help=_PATH_HELP[arg])
         s.add_argument("-o", "--output", default="-", help="CSV path, '-' = stdout")
+        if arg == "case":
+            s.add_argument(
+                "--rstdates", default="",
+                help="grid/pillars: restart dates to include "
+                     "(first/last/all/ISO date; default: none — the "
+                     "reference res2csv default)",
+            )
         if name == "compdat":
             s.add_argument(
                 "--initvectors", nargs="+", default=None,
@@ -324,17 +251,6 @@ def get_parser() -> argparse.ArgumentParser:
                 help="ISO date stamped on tree records occurring before "
                      "any START/DATES",
             )
-    for name, help_ in _BINARY_MODULES.items():
-        s = sub.add_parser(name, help=help_)
-        _add_verbosity(s)
-        s.add_argument("case", help="case root (path with or without .DATA)")
-        s.add_argument("-o", "--output", default="-", help="CSV path, '-' = stdout")
-        s.add_argument(
-            "--rstdates", default="",
-            help="grid/pillars: restart dates to include "
-                 "(first/last/all/ISO date; default: none — the "
-                 "reference res2csv default)",
-        )
         if name in ("grid", "pillars"):
             s.add_argument(
                 "--stackdates", action="store_true",
@@ -485,31 +401,27 @@ def get_parser() -> argparse.ArgumentParser:
                      "cases named in SMSPEC RESTART (reference summary "
                      "--include_restart)",
             )
-    for name, help_ in _DECK_MODULES_EXTRA.items():
-        s = sub.add_parser(name, help=help_)
-        _add_verbosity(s)
-        s.add_argument("deckfile", help="input .DATA / include file")
-        s.add_argument(
-            "--zonemap", default=None,
-            help="lyr zonemap file (default: zones.lyr next to the deck, "
-                 "silently empty when absent — reference get_zonemap)",
-        )
-        s.add_argument(
-            "--excl_well_startswith", default=None,
-            help="exclude wells with this name prefix (P8)",
-        )
-        s.add_argument(
-            "--use_wellconnstatus", action="store_true",
-            help="use OPEN/SHUT events extracted from CPI* summary "
-                 "vectors instead of the schedule file (reference "
-                 "wellcompletiondata --use_wellconnstatus)",
-        )
-        s.add_argument(
-            "--arrow", action="store_true",
-            help="write Arrow IPC (feather) instead of CSV, with KH "
-                 "unit metadata (reference wellcompletiondata --arrow)",
-        )
-        s.add_argument("-o", "--output", default="-", help="CSV path, '-' = stdout")
+        if name == "wellcompletiondata":
+            s.add_argument(
+                "--zonemap", default=None,
+                help="lyr zonemap file (default: zones.lyr next to the deck, "
+                     "silently empty when absent — reference get_zonemap)",
+            )
+            s.add_argument(
+                "--excl_well_startswith", default=None,
+                help="exclude wells with this name prefix (P8)",
+            )
+            s.add_argument(
+                "--use_wellconnstatus", action="store_true",
+                help="use OPEN/SHUT events extracted from CPI* summary "
+                     "vectors instead of the schedule file (reference "
+                     "wellcompletiondata --use_wellconnstatus)",
+            )
+            s.add_argument(
+                "--arrow", action="store_true",
+                help="write Arrow IPC (feather) instead of CSV, with KH "
+                     "unit metadata (reference wellcompletiondata --arrow)",
+            )
     return p
 
 
@@ -522,62 +434,7 @@ def main(argv: list[str] | None = None) -> int:
         args.__dict__["arrow"] = True
     spark = get_spark(f"res2csv-{args.module}")
     spark.sparkContext.setLogLevel("ERROR")
-    if args.module in _BINARY_MODULES:
-        df = _run_binary_module(
-            args.module, spark, args.case, args.rstdates,
-            time_index=getattr(args, "time_index", None),
-            column_keys=getattr(args, "column_keys", None),
-            start_date=getattr(args, "start_date", None),
-            end_date=getattr(args, "end_date", None),
-            with_params=getattr(args, "params", False),
-            vectors=getattr(args, "vectors", None),
-            dropconstants=getattr(args, "dropconstants", False),
-            stackdates=getattr(args, "stackdates", False),
-            region=getattr(args, "region", None),
-            soilcutoff=getattr(args, "soilcutoff", 0.5),
-            sgascutoff=getattr(args, "sgascutoff", 0.5),
-            swatcutoff=getattr(args, "swatcutoff", 0.5),
-            group=getattr(args, "group", False),
-            wellname=getattr(args, "wellname", None),
-            date=getattr(args, "date", None),
-            include_restart=getattr(args, "include_restart", False),
-            paramfile=getattr(args, "paramfile", None),
-            coords=getattr(args, "coords", False),
-            pillars=getattr(args, "pillars", False),
-            boundaryfilter=getattr(args, "boundaryfilter", False),
-            onlyk=getattr(args, "onlyk", False),
-            onlyij=getattr(args, "onlyij", False),
-            addnnc=getattr(args, "addnnc", False),
-            fipname=getattr(args, "fipname", None),
-        )
-    elif args.module in _DECK_MODULES_EXTRA:
-        from res2df_spark.sources.deck import read_deck
-
-        deck_text = read_deck(args.deckfile)
-        import os as _os
-
-        df = _run_wellcompletiondata(
-            spark, deck_text, args.zonemap, args.excl_well_startswith,
-            deck_dir=_os.path.dirname(_os.path.abspath(args.deckfile)),
-            use_wellconnstatus=getattr(args, "use_wellconnstatus", False),
-            case_path=args.deckfile,
-        )
-    else:
-        from res2df_spark.sources.deck import read_deck
-
-        deck_text = read_deck(args.deckfile)
-        startdate = getattr(args, "startdate", None)
-        if startdate:
-            from datetime import date as _date
-
-            startdate = _date.fromisoformat(startdate)
-        df = _run_deck_module(
-            args.module, spark, deck_text, startdate=startdate,
-            initvectors=getattr(args, "initvectors", None),
-            vfpnumbers=getattr(args, "vfpnumbers", None),
-            keywords=getattr(args, "keywords", None),
-            deckfile=args.deckfile,
-        )
+    df = _frame(ResdataCase(spark, args.path), args)
     if df is None:
         print("no matching keywords found in deck", file=sys.stderr)
         return 1

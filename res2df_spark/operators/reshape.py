@@ -8,6 +8,7 @@ input, so a 100 TB input explodes partition-locally.
 
 from __future__ import annotations
 
+import datetime
 import re
 from collections.abc import Mapping, Sequence
 
@@ -123,11 +124,30 @@ def melt(
     return stacked
 
 
+#: separator of the ``NAME@YYYY-MM-DD`` wide headers
+_DATE_SEP = "@"
+
+
+def _date_tag(d) -> str:
+    """ISO calendar date of a date or datetime, ``str(d)`` otherwise."""
+    if isinstance(d, datetime.datetime):
+        d = d.date()
+    return d.isoformat() if isinstance(d, datetime.date) else str(d)
+
+
+def dated_header(name: str, date) -> str:
+    """``NAME@YYYY-MM-DD`` — the reference's wide header for restart
+    data (grid.py:258-262, pillars.py): the calendar date of a date or
+    datetime (a pandas Timestamp included), or a string tag as is.
+    Every dated wide header is built here, and
+    :func:`stack_dated_columns` parses them back."""
+    return f"{name}{_DATE_SEP}{_date_tag(date)}"
+
+
 def stack_dated_columns(
     df: DataFrame,
     id_cols: Sequence[str],
     dated_cols: Sequence[str],
-    sep: str = "@",
     var_name: str = "VARIABLE",
     date_name: str = "DATE",
     value_name: str = "VALUE",
@@ -135,20 +155,16 @@ def stack_dated_columns(
     """Melt ``NAME@YYYY-MM-DD`` wide columns into (VARIABLE, DATE, VALUE)
     rows (R6 variant used by pillars stackdates,
     /root/reference/src/res2df/common.py:787-844)."""
-    import re as _re
-
     # validate driver-side: a column without the separator would hit
     # split().getItem(1) → INVALID_ARRAY_INDEX mid-job under ANSI mode
     # instead of a clear error naming the column
-    missing = [c for c in dated_cols if sep not in c]
+    missing = [c for c in dated_cols if _DATE_SEP not in c]
     if missing:
         raise ValueError(
-            f"dated columns missing the {sep!r} separator: {missing}"
+            f"dated columns missing the {_DATE_SEP!r} separator: {missing}"
         )
     out = melt(df, id_cols, dated_cols, var_name="__nv", value_name=value_name)
-    # F.split treats the separator as a REGEX — escape it so '.', '|'
-    # and friends split on the literal character, not on everything
-    split = F.split(F.col("__nv"), _re.escape(sep), 2)
+    split = F.split(F.col("__nv"), _DATE_SEP, 2)
     return (
         out.withColumn(var_name, split.getItem(0))
         .withColumn(date_name, F.to_date(split.getItem(1)))
@@ -160,7 +176,6 @@ def dates_to_headers(
     df: DataFrame,
     id_cols: Sequence[str],
     date_col: str = "DATE",
-    sep: str = "@",
 ) -> DataFrame:
     """Inverse of :func:`stack_dated_columns` — pivot a stacked frame's
     DATE column into ``NAME@YYYY-MM-DD`` wide headers, the reference's
@@ -179,11 +194,6 @@ def dates_to_headers(
     dates = sorted(
         r[0] for r in df.select(date_col).distinct().collect() if r[0] is not None
     )
-
-    def _iso(d) -> str:
-        iso = getattr(d, "date", lambda: d)()
-        return iso.isoformat() if hasattr(iso, "isoformat") else str(d)
-
     out = (
         df.groupBy(*[F.col(c) for c in id_cols])
         .pivot(date_col, dates)
@@ -199,7 +209,7 @@ def dates_to_headers(
     # colliders back yields duplicate DATE rows — the collision is
     # surfaced, not round-trippable; sub-day data belongs in the
     # stacked shape.)
-    tags = [_iso(d) for d in dates]
+    tags = [_date_tag(d) for d in dates]
     collided = {t for t in tags if tags.count(t) > 1}
     if collided:
         import warnings
@@ -214,9 +224,7 @@ def dates_to_headers(
     renames: dict[str, str] = {}
     for d, tag in zip(dates, tags):
         pref = str(d)
-        if tag in collided:
-            tag = str(d)
         for c in value_cols:
             src = f"{pref}_{c}" if len(value_cols) > 1 else pref
-            renames[src] = f"{c}{sep}{tag}"
+            renames[src] = dated_header(c, pref if tag in collided else d)
     return out.withColumnsRenamed(renames)

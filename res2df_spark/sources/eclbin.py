@@ -389,6 +389,18 @@ def summary_meta(spark, smspec_path: str):
     return meta_from_units(spark, meta["vectors"], meta["units"])
 
 
+def _local_path(path: str) -> str | None:
+    """Local filesystem path of a ``binaryFile`` path: a plain path (a
+    single-letter scheme is a Windows drive, not a URI) or a ``file:``
+    URI, unquoted.  None for any other scheme."""
+    from urllib.parse import unquote, urlparse
+
+    parsed = urlparse(path)
+    if parsed.scheme == "file":
+        return unquote(parsed.path)
+    return path if len(parsed.scheme) <= 1 else None
+
+
 def summary_long_many(spark, root_glob: str):
     """Distributed ensemble ingest: every ``*.SMSPEC`` under the glob
     becomes one task that parses its run and emits long rows tagged
@@ -420,16 +432,11 @@ def summary_long_many(spark, root_glob: str):
     # run would silently shrink the ensemble — exactly what the skip
     # exists to surface.  The reader is local-filesystem-by-contract
     # (the scheme guard below), so the driver sees the same files.
-    from urllib.parse import unquote, urlparse
-
     missing = []
     for (path,) in files.select("path").collect():
-        parsed = urlparse(path)
-        if len(parsed.scheme) == 1:  # Windows drive, not a URI
-            parsed = parsed._replace(scheme="", path=path)
-        if parsed.scheme not in ("", "file"):
+        local = _local_path(path)
+        if local is None:
             continue  # the worker raises NotImplementedError for these
-        local = unquote(parsed.path) if parsed.scheme else path
         if not os.path.exists(os.path.splitext(local)[0] + ".UNSMRY"):
             missing.append(path)
     if missing:
@@ -447,20 +454,16 @@ def summary_long_many(spark, root_glob: str):
     def parse(batches):
         for pdf in batches:
             for path, smspec in zip(pdf["path"], pdf["content"]):
-                from urllib.parse import unquote, urlparse
+                local = _local_path(path)
+                if local is None:
+                    from urllib.parse import urlparse
 
-                parsed = urlparse(path)
-                # a single-letter scheme is a Windows drive, not a URI
-                if len(parsed.scheme) == 1:
-                    parsed = parsed._replace(scheme="", path=path)
-                if parsed.scheme not in ("", "file"):
                     raise NotImplementedError(
                         f"summary_long_many resolves sibling UNSMRY files "
                         f"via the local filesystem; got scheme "
-                        f"{parsed.scheme!r} ({path}) — copy the ensemble "
-                        f"locally or extend this reader"
+                        f"{urlparse(path).scheme!r} ({path}) — copy the "
+                        f"ensemble locally or extend this reader"
                     )
-                local = unquote(parsed.path) if parsed.scheme else path
                 unsmry = os.path.splitext(local)[0] + ".UNSMRY"
                 if not os.path.exists(unsmry):
                     # LOUDLY skip: a crashed run's SMSPEC without its
@@ -561,6 +564,26 @@ def write_summary(smspec_path: str, start: datetime.datetime, wide) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _egrid_global(egrid_buf: bytes, want: set[str]) -> dict:
+    """First value of each keyword in an EGRID's GLOBAL section.
+
+    LGR-bearing EGRIDs repeat GRIDHEAD/COORD/ZCORN/ACTNUM/NNC1/NNC2 per
+    local grid and the global grid always comes first, so the scan stops
+    at the second GRIDHEAD: a fully-active global grid (no ACTNUM)
+    cannot pick up an LGR section's wrong-length mask, and LGR-local NNC
+    indices are never decoded against global dims.  Only GRIDHEAD and
+    the ``want`` keywords are decoded (:func:`iter_keywords`)."""
+    kws: dict = {}
+    seen_gridhead = False
+    for k, _t, v in iter_keywords(egrid_buf, want=want | {"GRIDHEAD"}):
+        if k == "GRIDHEAD":
+            if seen_gridhead:
+                break
+            seen_gridhead = True
+        kws.setdefault(k, v)
+    return kws
+
+
 #: Cell budget per geometry K-slab (~1 KB transient per cell inside a
 #: slab) — module-level so tests can force the multi-slab path.
 _GEOM_SLAB_CELLS = 2_000_000
@@ -579,19 +602,7 @@ def grid_geometry_pandas(egrid_buf: bytes):
     (exact for planar-faced cells)."""
     import pandas as pd
 
-    # GLOBAL section only: LGR-bearing EGRIDs repeat GRIDHEAD/COORD/
-    # ZCORN/ACTNUM per local grid and the global grid always comes
-    # first — stop at the second GRIDHEAD (the same guard as grid_table
-    # / nnc_table) so a fully-active global grid that omits ACTNUM
-    # cannot pick up an LGR section's wrong-length mask
-    kws = {}
-    seen_gridhead = False
-    for k, _t, v in iter_keywords(egrid_buf):
-        if k == "GRIDHEAD":
-            if seen_gridhead:
-                break
-            seen_gridhead = True
-        kws.setdefault(k, v)
+    kws = _egrid_global(egrid_buf, want={"COORD", "ZCORN", "ACTNUM"})
     gh = kws["GRIDHEAD"]
     nx, ny, nz = int(gh[1]), int(gh[2]), int(gh[3])
     coord = np.asarray(kws["COORD"], dtype=np.float64).reshape(ny + 1, nx + 1, 6)
@@ -828,25 +839,15 @@ def grid_table(spark, egrid_path: str, init_path: str | None = None,
     with open(egrid_path, "rb") as f:
         ebuf = f.read()
     geo_pdf = grid_geometry_pandas(ebuf)
-    nactive, nglobal = len(geo_pdf), 0
-    actnum = None
-    # GLOBAL section only: LGR-bearing EGRIDs repeat GRIDHEAD/ACTNUM per
-    # local grid, and the global grid always comes first — stop scanning
-    # at the second GRIDHEAD so a fully-active global grid (no ACTNUM)
-    # cannot pick up an LGR's wrong-length mask
-    seen_gridhead = False
     # header-only re-scan: decodes just GRIDHEAD/ACTNUM, seeking past
     # the ZCORN/COORD blocks grid_geometry_pandas already decoded
-    for k, _t, v in iter_keywords(ebuf, want={"GRIDHEAD", "ACTNUM"}):
-        if k == "GRIDHEAD":
-            if seen_gridhead:
-                break
-            seen_gridhead = True
-            nglobal = int(v[1]) * int(v[2]) * int(v[3])
-        elif k == "ACTNUM" and len(v) and actnum is None:
-            actnum = np.asarray(v)
-    if actnum is None:
-        actnum = np.ones(nglobal, dtype=np.int64)
+    kws = _egrid_global(ebuf, want={"ACTNUM"})
+    gh = kws["GRIDHEAD"]
+    nactive, nglobal = len(geo_pdf), int(gh[1]) * int(gh[2]) * int(gh[3])
+    actnum = (
+        np.asarray(kws["ACTNUM"]) if "ACTNUM" in kws and len(kws["ACTNUM"])
+        else np.ones(nglobal, dtype=np.int64)
+    )
     import fnmatch
 
     pats = [vectors] if isinstance(vectors, str) else list(vectors)
@@ -892,22 +893,19 @@ def grid_table(spark, egrid_path: str, init_path: str | None = None,
                 # '@'-tagged when dateinheaders or multiple dates
                 # (grid.py:258-262, 278-279).  The per-date frames are
                 # the same driver-side pandas the stacked path builds —
-                # the joins stay ACTIVE_INDEX equi-joins.  NOTE the
-                # 'NAME@YYYY-MM-DD' tag format is shared with the
-                # Spark-side pivot operators/reshape.dates_to_headers
-                # (and its stack_dated_columns inverse) — change the
-                # format in all of them together.
+                # the joins stay ACTIVE_INDEX equi-joins.
+                import pandas as pd
+
+                from res2df_spark.operators.reshape import dated_header
+
                 dates = sorted(rst["DATE"].unique())
                 tag = dateinheaders or len(dates) > 1
                 for d in dates:
                     sub = rst[rst["DATE"] == d].drop(columns=["DATE"])
                     if tag:
-                        import pandas as pd
-
-                        iso = pd.Timestamp(d).date().isoformat()
-                        sub = sub.rename(
-                            columns={c: f"{c}@{iso}" for c in keep}
-                        )
+                        sub = sub.rename(columns={
+                            c: dated_header(c, pd.Timestamp(d)) for c in keep
+                        })
                     df = df.join(
                         spark.createDataFrame(sub), "ACTIVE_INDEX", "left"
                     )
@@ -981,25 +979,12 @@ def nnc_table(spark, egrid_path: str, init_path: str | None = None):
 
     with open(egrid_path, "rb") as f:
         ebuf = f.read()
-    nx = ny = nz = 0
-    nnc1 = nnc2 = None
-    # GLOBAL section only: stop at the second GRIDHEAD (LGR sections can
-    # carry their own NNC1/NNC2, whose local indices must not overwrite
-    # the global list and be decoded against global dims) — same policy
-    # as grid_table / grid_geometry_pandas
-    seen_gridhead = False
     # header-only scan: ZCORN/COORD are irrelevant to the NNC pair list
-    for k, _t, v in iter_keywords(ebuf, want={"GRIDHEAD", "NNC1", "NNC2"}):
-        if k == "GRIDHEAD":
-            if seen_gridhead:
-                break
-            seen_gridhead = True
-            nx, ny, nz = int(v[1]), int(v[2]), int(v[3])
-        elif k == "NNC1" and nnc1 is None:
-            nnc1 = np.asarray(v, dtype=np.int64)
-        elif k == "NNC2" and nnc2 is None:
-            nnc2 = np.asarray(v, dtype=np.int64)
-    if nnc1 is None or nnc2 is None or nx == 0:
+    kws = _egrid_global(ebuf, want={"NNC1", "NNC2"})
+    nx = ny = 0
+    if "GRIDHEAD" in kws:
+        nx, ny = int(kws["GRIDHEAD"][1]), int(kws["GRIDHEAD"][2])
+    if "NNC1" not in kws or "NNC2" not in kws or nx == 0:
         return spark.createDataFrame(
             [], "I1 int, J1 int, K1 int, I2 int, J2 int, K2 int, TRAN double"
         )
@@ -1012,8 +997,8 @@ def nnc_table(spark, egrid_path: str, init_path: str | None = None):
             (g0 // (nx * ny) + 1).astype(np.int32),
         )
 
-    i1, j1, k1 = ijk(nnc1)
-    i2, j2, k2 = ijk(nnc2)
+    i1, j1, k1 = ijk(np.asarray(kws["NNC1"], dtype=np.int64))
+    i2, j2, k2 = ijk(np.asarray(kws["NNC2"], dtype=np.int64))
     pdf = pd.DataFrame(
         {"I1": i1, "J1": j1, "K1": k1, "I2": i2, "J2": j2, "K2": k2}
     )

@@ -63,6 +63,25 @@ def rows(df, *cols):
     return sorted(tuple(r) for r in df.collect())
 
 
+@pytest.fixture(scope="session")
+def gencase(tmp_path_factory):
+    """A tiny Reek-shaped case written by the benchmark's seeded
+    generator (``perfbench/gen.py``): EGRID/INIT/UNRST/SMSPEC/UNSMRY/RFT
+    and a ``.DATA`` with INCLUDEs.  Returns ``(root, model)`` — the case
+    path without extension and the arrays the generator wrote, which
+    the tests compare against.  Read-only: tests write elsewhere."""
+    import importlib.util
+
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_gen", os.path.join(here, "perfbench", "gen.py")
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    model = gen.gen_case(str(tmp_path_factory.mktemp("gencase")), "tiny", 2)
+    return os.path.join(model["dir"], gen.CASE_NAME), model
+
+
 # --------------------------------------------------------------------
 # worker side: stream every test report to the parent as one JSON line
 # --------------------------------------------------------------------

@@ -267,24 +267,28 @@ COMPDAT
     assert "UPPER" in out and "LOWER" in out
 
 
-def test_cli_summary_date_crop_and_arrow(tmp_path):
+def test_cli_summary_date_crop_and_arrow(gencase, tmp_path):
     import pandas as pd
 
+    root, model = gencase
     assert cli.main([
-        "summary", f"{_EIGHT}/EIGHTCELLS", "-o", str(tmp_path / "s.csv"),
+        "summary", root, "-o", str(tmp_path / "s.csv"),
         "--start_date", "2000-02-01",
     ]) == 0
     df = pd.read_csv(tmp_path / "s.csv")
     assert (pd.to_datetime(df["DATE"]) >= "2000-02-01").all()
+    # the generated report steps are month starts from 2000-01-01: the
+    # crop drops exactly the first one
+    assert len(df) == len(model["summary"]) - 1
 
     arrow_path = tmp_path / "s.feather"
     assert cli.main([
-        "summary", f"{_EIGHT}/EIGHTCELLS", "-o", str(arrow_path), "--arrow",
+        "summary", root, "-o", str(arrow_path), "--arrow",
     ]) == 0
     import pyarrow.feather as feather
 
     t = feather.read_table(str(arrow_path))
-    assert t.num_rows > 0
+    assert t.num_rows == len(model["summary"])
 
 
 def test_gruptree_prettyprint_cli(spark, tmp_path, capsys):
@@ -689,3 +693,231 @@ def test_cli_summary_include_restart_and_paramfile(tmp_path, capsys):
     # "BPR:1,1,1" — assert membership instead of position
     assert "MYKEY" in out[0]
     assert ",42" in out[1] or out[1].startswith("42")
+
+
+# ---------------------------------------------------------------------------
+# Binary subcommands on a generated case (the ``gencase`` fixture: the
+# benchmark's seeded tiny Reek-shaped case).  Expected row counts,
+# headers and values come from the arrays the generator wrote.
+# ---------------------------------------------------------------------------
+
+
+def _csv(tmp_path, *argv):
+    """Run res2csv with ``-o <tmp csv>`` and read the result back."""
+    import pandas as pd
+
+    out = tmp_path / f"out{len(list(tmp_path.iterdir()))}.csv"
+    assert cli.main([*argv, "-o", str(out)]) == 0
+    return pd.read_csv(out)
+
+
+def _active_index(model, i, j, k):
+    """0-based active index of 1-based (I, J, K) in the generated grid."""
+    import numpy as np
+
+    shape = model["shape"]
+    g = (i - 1) + shape["nx"] * (j - 1) + shape["nx"] * shape["ny"] * (k - 1)
+    return int(np.cumsum(model["actnum"])[g]) - 1
+
+
+def _start_conns(model):
+    """{well: [K, ...]} of the completions at the schedule's start date,
+    in the generator's well order."""
+    start = model["rst_dates"][0]
+    out: dict = {}
+    for well, _i, _j, k, _status, d in model["compdat"]:
+        if d == start:
+            out.setdefault(well, []).append(k)
+    return out
+
+
+def test_cli_summary_generated(gencase, tmp_path):
+    import numpy as np
+    import pandas as pd
+
+    root, model = gencase
+    wide = model["summary"]
+    wopr = sorted(c for c in wide.columns if c.startswith("WOPR:"))
+    df = _csv(tmp_path, "summary", root, "--column_keys", "FOPT,WOPR:*")
+    assert list(df.columns) == ["DATE", "FOPT", *wopr]
+    assert len(df) == len(wide)
+    assert (pd.to_datetime(df["DATE"]) == wide.index).all()
+    assert np.allclose(df[["FOPT", *wopr]], wide[["FOPT", *wopr]], rtol=1e-6)
+
+    # the report steps are month starts, so the monthly spine is the raw
+    # one and a total keeps its values
+    df = _csv(tmp_path, "summary", root, "--time_index", "monthly",
+              "--column_keys", "FOPT")
+    assert list(df.columns) == ["DATE", "FOPT"]
+    assert (pd.to_datetime(df["DATE"]) == wide.index).all()
+    assert np.allclose(df["FOPT"], wide["FOPT"], rtol=1e-6)
+
+
+def test_cli_grid_restart_wide_vs_stacked_generated(gencase, tmp_path):
+    import numpy as np
+
+    root, model = gencase
+    dates = model["rst_dates"]
+    wide = _csv(tmp_path, "grid", root, "--rstdates", "all")
+    assert "DATE" not in wide.columns
+    assert {f"{v}@{d.isoformat()}" for v in ("PRESSURE", "SWAT", "SGAS")
+            for d in dates} <= set(wide.columns)
+    assert len(wide) == model["nactive"]
+    wide = wide.sort_values("ACTIVE_INDEX")
+    for d in dates:
+        assert np.allclose(wide[f"PRESSURE@{d.isoformat()}"],
+                           model["rst"][d]["PRESSURE"])
+
+    stacked = _csv(tmp_path, "grid", root, "--rstdates", "all", "--stackdates")
+    assert {"DATE", "PRESSURE", "SWAT", "SGAS"} <= set(stacked.columns)
+    assert not any("@" in c for c in stacked.columns)
+    assert len(stacked) == model["nactive"] * len(dates)
+    stacked = stacked.sort_values(["DATE", "ACTIVE_INDEX"])
+    assert np.allclose(
+        stacked["PRESSURE"],
+        np.concatenate([model["rst"][d]["PRESSURE"] for d in dates]),
+    )
+
+
+def test_cli_grid_vectors_and_dropconstants_generated(gencase, tmp_path):
+    import numpy as np
+
+    root, model = gencase
+    df = _csv(tmp_path, "grid", root, "--vectors", "PERM*")
+    assert {"PERMX", "PERMY", "PERMZ"} <= set(df.columns)
+    assert not {"PORO", "NTG", "SATNUM"} & set(df.columns)
+    assert {"I", "J", "K", "ACTIVE_INDEX"} <= set(df.columns)
+    assert len(df) == model["nactive"]
+
+    df = _csv(tmp_path, "grid", root, "--dropconstants")
+    # SATNUM is 1 in every cell; the varying properties stay
+    assert "SATNUM" not in df.columns
+    assert {"PORO", "PERMX", "FIPNUM", "I", "J", "K"} <= set(df.columns)
+    assert np.allclose(df.sort_values("ACTIVE_INDEX")["PORO"],
+                       model["init"]["PORO"])
+
+
+def test_cli_rft_wellname_and_date_generated(gencase, tmp_path):
+    root, model = gencase
+    conns = _start_conns(model)
+    rft_wells = list(conns)[: model["shape"]["rft_wells"]]
+    every = _csv(tmp_path, "rft", root)
+    assert len(every) == model["rft_rows"]
+
+    well = rft_wells[0]
+    df = _csv(tmp_path, "rft", root, "--wellname", well)
+    # one survey per well at each of the first two restart dates
+    assert len(df) == 2 * len(conns[well])
+    assert set(df["WELL"]) == {well}
+
+    day = model["rst_dates"][1].isoformat()
+    df = _csv(tmp_path, "rft", root, "--date", day)
+    assert len(df) == sum(len(conns[w]) for w in rft_wells)
+    assert {d[:10] for d in df["DATE"]} == {day}
+
+
+def test_cli_trans_generated(gencase, tmp_path):
+    import numpy as np
+
+    root, model = gencase
+    df = _csv(tmp_path, "trans", root)
+    assert list(df.columns) == ["I1", "J1", "K1", "I2", "J2", "K2", "DIR", "TRAN"]
+    # every TRAN* value the generator writes is positive: one face per
+    # active cell and direction, the neighbour one step along it
+    assert len(df) == 3 * model["nactive"]
+    for d, vec in (("I", "TRANX"), ("J", "TRANY"), ("K", "TRANZ")):
+        part = df[df["DIR"] == d].sort_values(["K1", "J1", "I1"])
+        assert len(part) == model["nactive"]
+        assert np.allclose(part["TRAN"], model["init"][vec])
+
+
+def test_cli_pillars_generated(gencase, tmp_path):
+    import numpy as np
+
+    root, model = gencase
+    nx, ny = model["shape"]["nx"], model["shape"]["ny"]
+    active_columns = model["actnum"].reshape(-1, nx * ny).any(axis=0)
+    df = _csv(tmp_path, "pillars", root)
+    assert "PILLAR" in df.columns
+    assert len(df) == int(np.count_nonzero(active_columns))
+
+
+def test_cli_nnc_generated(gencase, tmp_path):
+    root, _model = gencase
+    # the generated EGRID has no NNC1/NNC2: header only
+    df = _csv(tmp_path, "nnc", root)
+    assert list(df.columns) == ["I1", "J1", "K1", "I2", "J2", "K2", "TRAN"]
+    assert len(df) == 0
+    df = _csv(tmp_path, "nnc", root, "--pillars", "--coords")
+    assert list(df.columns) == ["I1", "J1", "K1", "I2", "J2", "K2", "TRAN",
+                                "X", "Y", "Z"]
+    assert len(df) == 0
+
+
+def test_cli_compdat_initvectors_generated(gencase, tmp_path):
+    import numpy as np
+
+    root, model = gencase
+    df = _csv(tmp_path, "compdat", root + ".DATA", "--initvectors", "PORO")
+    assert {"WELL", "I", "J", "K1", "K2", "OP/SH", "PORO"} <= set(df.columns)
+    active = model["actnum"].astype(bool)
+    nx, ny = model["shape"]["nx"], model["shape"]["ny"]
+    # inner join: a connection in an inactive cell has no grid row
+    want = sorted(
+        (w, i, j, k, status, d.isoformat())
+        for w, i, j, k, status, d in model["compdat"]
+        if active[(i - 1) + nx * (j - 1) + nx * ny * (k - 1)]
+    )
+    got = sorted(zip(df["WELL"], df["I"], df["J"], df["K1"], df["OP/SH"],
+                     (d[:10] for d in df["DATE"])))
+    assert got == want
+    poro = model["init"]["PORO"]
+    assert np.allclose(
+        df["PORO"],
+        [poro[_active_index(model, i, j, k)]
+         for i, j, k in zip(df["I"], df["J"], df["K1"])],
+    )
+
+
+def test_cli_wellcompletiondata_missing_zonemap_ignored(gencase, tmp_path,
+                                                        capsys):
+    """An explicitly named zonemap that does not exist warns on stderr
+    and continues with an empty map: rc 0, no zone rows."""
+    root, _model = gencase
+    missing = tmp_path / "nosuch.lyr"
+    assert cli.main(["wellcompletiondata", root + ".DATA",
+                     "--zonemap", str(missing), "-o", "-"]) == 0
+    captured = capsys.readouterr()
+    assert f"{missing} not found, ignoring" in captured.err
+    lines = captured.out.splitlines()
+    assert lines[0].split(",")[:2] == ["WELL", "ZONE"]
+    assert lines[1:] == []
+
+
+def test_case_reads_deck_from_any_path(spark, gencase):
+    """A deck named by a path that is not ``<root>.DATA`` (an include
+    file) is read as given, like the reference's ``get_deck``."""
+    from res2df_spark.case import ResdataCase
+    from res2df_spark.modules import tables
+    from res2df_spark.sources.deck import read_deck
+
+    root, _model = gencase
+    inc = os.path.join(os.path.dirname(root), "include", "props.inc")
+    got = ResdataCase(spark, inc).satfunc()
+    want = tables.satfunc_df(spark, read_deck(inc))
+    assert want.count() > 0
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_cli_fipreports_bare_prt_file(spark, tmp_path):
+    """fipreports takes a PRT file as its case argument, whatever the
+    case of its extension (reference fipreports_main)."""
+    from res2df_spark.modules import fipreports
+    from tests.test_fipreports_corpus import GASWATER_PRT
+
+    for name in ("GW.PRT", "gw.prt"):
+        prt = tmp_path / name
+        prt.write_text(GASWATER_PRT)
+        df = _csv(tmp_path, "fipreports", str(prt))
+        assert len(df) == fipreports.df(spark, str(prt)).count() == 5
+        assert set(df["REGION"]) == {2}
